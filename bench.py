@@ -131,7 +131,7 @@ def main() -> None:
             )
     else:
         sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     n_draws = int(os.environ.get("SPARK_GRAFT_DRAWS", "3" if sf1_mode else "5"))
 
     from minimised_impala_spark.session import build_session

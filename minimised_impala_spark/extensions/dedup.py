@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from minimised_impala_spark.operators.pairs import ordered_pairs
 from minimised_impala_spark.queries.registry import QUERIES, query
 from minimised_impala_spark.tables import load_table
 
@@ -344,30 +345,13 @@ def lsh_candidate_pairs_of(docs: DataFrame) -> DataFrame:
 
 
 def _pairs_from_bands(bands: DataFrame) -> DataFrame:
-    """Distinct candidate pairs from a (doc_id, band, bsig) band frame.
-
-    Candidate pairs per bucket via groupBy + in-bucket pair expansion:
-    ONE exchange on the bucket key, instead of a self-join's two (and the
-    self-join would execute the signature lineage twice). Pair count per
-    bucket is k², bounded by near-dup cluster size — the same bound the
-    self-join has; a giant bucket means a degenerate band either way.
-    Two chained Generate nodes, not a flatten/transform lambda tree:
-    generators stay in whole-stage codegen while nested lambdas run
-    interpreted per element and allocate a struct per pair (same r12
-    rewrite as the embedding-LSH candidate stages; measured ~40%
-    faster on the candidate stage at sf0.1, identical pairs)."""
-    ids = F.sort_array(F.collect_list("doc_id"))
-    return (
-        bands.groupBy("band", "bsig")
-        .agg(ids.alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select("ids", F.posexplode("ids").alias("i", "d1"))
-        .select(
-            "d1",
-            F.explode(F.expr("slice(ids, i + 2, size(ids) - i - 1)")).alias("d2"),
-        )
-        .distinct()
+    """Distinct candidate pairs from a (doc_id, band, bsig) band frame:
+    in-bucket pair expansion (operators/pairs.py). A giant bucket means a
+    degenerate band."""
+    buckets = bands.groupBy("band", "bsig").agg(
+        F.sort_array(F.collect_list("doc_id")).alias("ids")
     )
+    return ordered_pairs(buckets, "ids", "d1", "d2").distinct()
 
 
 def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -716,10 +700,11 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # 100 TB shape: signature stage is one narrow Arrow-batched matmul per
 # batch (1056 plane dots amortized into a single BLAS call); candidates
-# come from one self-equi-join on (band, bucket); rescore touches only
-# surviving pairs. No broadcast of the corpus, no n² rows.
+# come from one in-bucket pair expansion on (band, bucket); rescore
+# touches only surviving pairs. No broadcast of the corpus, no n² rows.
 _EMB_LSH_BANDS = 88
 _EMB_LSH_PLANES_PER_BAND = 12
+_EMB_LSH_TAU = 0.70
 # COUPLING: dedup_threshold_sweep's oracle counts EXACT all-pairs while
 # the engine counts banded-LSH candidates — the green compare rests on
 # recall-1 at tau >= 0.7 with THESE band parameters on THIS fixture.
@@ -753,8 +738,12 @@ ORDER BY left_id, right_id
 """
 
 
-@query("dedup_embedding_lsh", oracle=_EMB_LSH_ORACLE)
-def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _embedding_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(left_id, right_id, cosine) for every banded-LSH candidate pair of
+    the planted-twin embedding corpus whose int8 upper bound reaches
+    _EMB_LSH_TAU, with the exact cosine unrounded. Shared by
+    dedup_embedding_lsh and dedup_threshold_sweep: candidate filter, then
+    exact verify."""
     from minimised_impala_spark.extensions import vector_kernels as VK
     from minimised_impala_spark.shipping import ship_module_by_value
 
@@ -773,51 +762,31 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("e"),
     )
     corpus_df = base.unionByName(pert)
-
-    prep = VK.make_lsh_prep_udf(
-        _EMB_LSH_BANDS, _EMB_LSH_PLANES_PER_BAND, with_norm_vec=True
-    )
-    # ONE persisted index carrying the banded signatures, the normalized
-    # vector AND the int8 proxy codes for the rescore pre-filter, all
-    # from a single Arrow crossing (r12 + r13, guide §4.1: the
-    # JVM↔Python crossing is the cost — cross once with every output;
-    # plans/r12/dedup_embedding_lsh_{before,after}.txt show one
-    # ArrowEvalPython scan instead of two). persist, not localCheckpoint:
-    # same single-compute reuse, none of the checkpoint-RDD creation cost
-    # at plan-build time.
-    idx = corpus_df.select("vec_id", prep("e").alias("p")).select(
-        "vec_id", "p.ne", "p.sigs", "p.q", "p.qs", "p.nrm"
+    prep = VK.make_lsh_prep_udf(_EMB_LSH_BANDS, _EMB_LSH_PLANES_PER_BAND)
+    # ONE persisted index carries the raw vector, the banded signatures
+    # AND the int8 proxy codes, all from a single Arrow crossing (guide
+    # §4.1: the JVM↔Python crossing is the cost — cross once with every
+    # output): the pair generator, the proxy lookups and the vector
+    # lookups all read the same in-memory table. persist(), not
+    # localCheckpoint: checkpoint RDD creation is paid at call time even
+    # when lazy (serial driver cost); persist defers to first use.
+    idx = corpus_df.select("vec_id", "e", prep("e").alias("p")).select(
+        "vec_id", "e", "p.sigs", "p.q", "p.qs", "p.nrm"
     ).persist()
-    bands = idx.select("vec_id", F.posexplode("sigs").alias("band", "bucket"))
-    # Candidate pairs per bucket via groupBy + in-bucket pair expansion:
-    # ONE exchange on the bucket key instead of the previous self-join's
-    # two shuffles + join (guide §2.4) — the same pattern
-    # lsh_candidate_pairs_of uses for MinHash. Pair count per bucket is
-    # k², bounded by near-dup cluster density exactly as the self-join's
-    # per-bucket output was.
-    # Two chained Generate nodes (posexplode anchor, explode of the
-    # tail slice) instead of one flatten/transform/struct lambda tree:
-    # the generators stay in codegen while the nested lambdas run
-    # interpreted per element and allocate a struct per pair (measured
-    # 1.54 s vs 1.12 s for the candidate stage at sf0.1; same rows).
-    ids = F.sort_array(F.collect_list("vec_id"))
-    cand = (
-        bands.groupBy("band", "bucket")
-        .agg(ids.alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select("ids", F.posexplode("ids").alias("i", "left_id"))
-        .select(
-            "left_id",
-            F.explode(F.expr("slice(ids, i + 2, size(ids) - i - 1)")).alias(
-                "right_id"
-            ),
-        )
-        .distinct()  # a pair colliding in several bands scores once
+    buckets = (
+        idx.select("vec_id", F.posexplode("sigs").alias("band", "bucket"))
+        .groupBy("band", "bucket")
+        .agg(F.sort_array(F.collect_list("vec_id")).alias("ids"))
     )
-    # Bulk pre-filter on int8 proxy codes, exact rescore survivors only
-    # (r13, guide §2.3/§8 — same two-tier rescore as
-    # dedup_threshold_sweep; the ub kernel's bound is proven lossless in
-    # vector_kernels.py, so recall is untouched).
+    # a pair colliding in several bands scores once
+    cand = ordered_pairs(buckets, "ids", "left_id", "right_id").distinct()
+    # Bulk pre-filter on int8 proxy codes (guide §2.3/§8): candidate
+    # pairs outnumber corpus rows ~350:1 at sf1, so the rescore cost is
+    # the per-pair bytes crossing Arrow — 64 B codes + 2 scalars instead
+    # of 512 B doubles per side (~7x fewer bytes), and cosine_ub_pair is
+    # a PROVABLE upper bound (derivation in vector_kernels.py), so no
+    # pair that can reach τ is dropped. Only survivors (planted twins +
+    # a thin margin band) pay the exact double-precision kernel.
     qa = idx.select(
         F.col("vec_id").alias("left_id"), F.col("q").alias("lq"),
         F.col("qs").alias("lqs"), F.col("nrm").alias("lnrm"),
@@ -829,6 +798,8 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors = (
         cand.join(qa, "left_id")
         .join(qb, "right_id")
+        # *_once: the filter on the UDF output column otherwise gets
+        # pushed below the projection and the kernel runs twice (§4.4)
         .select(
             "left_id",
             "right_id",
@@ -836,24 +807,25 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "lq", "lqs", "lnrm", "rq", "rqs", "rnrm"
             ).alias("ub"),
         )
-        .filter(F.col("ub") >= 0.7)
+        .filter(F.col("ub") >= _EMB_LSH_TAU)
         .select("left_id", "right_id")
     )
-    norm = idx.select("vec_id", "ne")
+    va = idx.select(F.col("vec_id").alias("left_id"), F.col("e").alias("ea"))
+    vb = idx.select(F.col("vec_id").alias("right_id"), F.col("e").alias("eb"))
+    # cosine_pair is the oracle's own dot / (|a|·|b|) on the raw vectors;
+    # *_once because both callers filter on its output
     return (
-        survivors.join(
-            norm.select(F.col("vec_id").alias("left_id"), F.col("ne").alias("le")),
-            "left_id",
-        )
-        .join(
-            norm.select(F.col("vec_id").alias("right_id"), F.col("ne").alias("re")),
-            "right_id",
-        )
-        # *_once: the >= filter on the UDF output column otherwise gets
-        # pushed below the projection and the kernel runs twice per pair
-        # (two ArrowEvalPython nodes in the before-plan; guide §4.4)
-        .select("left_id", "right_id", VK.dot_pair_once("le", "re").alias("cosine"))
-        .filter(F.col("cosine") >= 0.7)
+        survivors.join(va, "left_id")
+        .join(vb, "right_id")
+        .select("left_id", "right_id", VK.cosine_pair_once("ea", "eb").alias("cosine"))
+    )
+
+
+@query("dedup_embedding_lsh", oracle=_EMB_LSH_ORACLE)
+def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (
+        _embedding_lsh_pairs(spark, sf_dir)
+        .filter(F.col("cosine") >= _EMB_LSH_TAU)
         .select("left_id", "right_id", F.round("cosine", 6).alias("cosine"))
         .orderBy("left_id", "right_id")
     )
@@ -2089,14 +2061,14 @@ def dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BEFORE picking the τ a semantic-dedup run will commit to: pair and
 # affected-doc counts at candidate thresholds, over the same
 # planted-twin corpus and banded-LSH candidate pipeline as
-# dedup_embedding_lsh (recall-1 at τ ≥ 0.7 on this corpus — proven by
-# that query's green exact-all-pairs oracle, which makes the sweep's
-# counts trustworthy). 100 TB shape: candidates come from the one
-# (band, bucket) self-equi-join; the rescore runs once; the 4-threshold
+# dedup_embedding_lsh (_embedding_lsh_pairs; recall-1 at τ ≥ 0.7 on this
+# corpus — proven by that query's green exact-all-pairs oracle, which
+# makes the sweep's counts trustworthy). 100 TB shape: the rescore runs
+# once at τ₀ = _SWEEP_TAUS[0], the pre-filter's τ; the 4-threshold
 # fan-out is a broadcast cross of the SCORED pairs (≪ corpus), so the
 # sweep costs one dedup candidate pass regardless of how many
 # thresholds are audited.
-_SWEEP_TAUS = (0.70, 0.80, 0.90, 0.95)
+_SWEEP_TAUS = (_EMB_LSH_TAU, 0.80, 0.90, 0.95)
 _SWEEP_ORACLE = f"""
 WITH base AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
@@ -2140,96 +2112,9 @@ ORDER BY t.tau
 
 @query("dedup_threshold_sweep", oracle=_SWEEP_ORACLE)
 def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from minimised_impala_spark.extensions import vector_kernels as VK
-    from minimised_impala_spark.shipping import ship_module_by_value
-
-    ship_module_by_value("minimised_impala_spark.extensions.vector_kernels")
-
-    base = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    pert = base.filter(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform(
-            "e", lambda x, i: F.when(i % 16 == 0, F.lit(0.0)).otherwise(x)
-        ).alias("e"),
-    )
-    corpus_df = base.unionByName(pert)
-    prep = VK.make_lsh_prep_udf(_EMB_LSH_BANDS, _EMB_LSH_PLANES_PER_BAND)
-    # persist(), not localCheckpoint: checkpoint RDD creation is paid at
-    # call time even when lazy (serial driver cost — this query was the
-    # #2 plan_build offender in BENCH_r09); persist defers to first use.
-    # ONE persisted index carries the raw vector, the banded signatures
-    # AND the int8 proxy codes for the rescore pre-filter, all from a
-    # single Arrow crossing (r12 + r13, guide §4.1: previously the
-    # banding UDF ran over one corpus scan and the rescore re-derived
-    # the perturbed corpus from parquet in a second — now the pair
-    # generator, the proxy lookups and the vector lookups all read the
-    # same in-memory table).
-    idx = corpus_df.select("vec_id", "e", prep("e").alias("p")).select(
-        "vec_id", "e", "p.sigs", "p.q", "p.qs", "p.nrm"
-    ).persist()
-    bands = idx.select("vec_id", F.posexplode("sigs").alias("band", "bucket"))
-    # in-bucket pair expansion: one exchange on the bucket key instead of
-    # the self-join's two (guide §2.4; same pattern as dedup_embedding_lsh)
-    # two chained Generate nodes, not a flatten/transform lambda tree —
-    # see the identical rewrite in dedup_embedding_lsh above
-    ids = F.sort_array(F.collect_list("vec_id"))
-    cand_ids = (
-        bands.groupBy("band", "bucket")
-        .agg(ids.alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select("ids", F.posexplode("ids").alias("i", "left_id"))
-        .select(
-            "left_id",
-            F.explode(F.expr("slice(ids, i + 2, size(ids) - i - 1)")).alias(
-                "right_id"
-            ),
-        )
-        .distinct()
-    )
-    # Bulk pre-filter on int8 proxy codes (r13, guide §2.3/§8): candidate
-    # pairs outnumber corpus rows ~350:1 at sf1, so the rescore cost is
-    # the per-pair bytes crossing Arrow — 64 B codes + 2 scalars instead
-    # of 512 B doubles per side (~7x fewer bytes), and cosine_ub_pair is
-    # a PROVABLE upper bound (derivation in vector_kernels.py), so no
-    # pair that can reach τ₀ is dropped. Only survivors (planted twins +
-    # a thin margin band) pay the exact double-precision kernel.
-    qa = idx.select(
-        F.col("vec_id").alias("left_id"), F.col("q").alias("lq"),
-        F.col("qs").alias("lqs"), F.col("nrm").alias("lnrm"),
-    )
-    qb = idx.select(
-        F.col("vec_id").alias("right_id"), F.col("q").alias("rq"),
-        F.col("qs").alias("rqs"), F.col("nrm").alias("rnrm"),
-    )
-    survivors = (
-        cand_ids.join(qa, "left_id")
-        .join(qb, "right_id")
-        # *_once: the filter on the UDF output column otherwise gets
-        # pushed below the projection and the kernel runs twice (§4.4)
-        .select(
-            "left_id",
-            "right_id",
-            VK.cosine_ub_pair_once(
-                "lq", "lqs", "lnrm", "rq", "rqs", "rnrm"
-            ).alias("ub"),
-        )
-        .filter(F.col("ub") >= _SWEEP_TAUS[0])
-        .select("left_id", "right_id")
-    )
-    va = idx.select(F.col("vec_id").alias("left_id"), F.col("e").alias("ea"))
-    vb = idx.select(F.col("vec_id").alias("right_id"), F.col("e").alias("eb"))
     cand = (
-        survivors.join(va, "left_id")
-        .join(vb, "right_id")
-        .select(
-            "left_id",
-            "right_id",
-            # *_once: see dedup_embedding_lsh — the tau filter on the
-            # output column otherwise duplicates the kernel (guide §4.4)
-            F.round(VK.cosine_pair_once("ea", "eb"), 6).alias("cosine"),
-        )
+        _embedding_lsh_pairs(spark, sf_dir)
+        .select("left_id", "right_id", F.round("cosine", 6).alias("cosine"))
         .filter(F.col("cosine") >= _SWEEP_TAUS[0])
     )
     thr = spark.createDataFrame([(t,) for t in _SWEEP_TAUS], "tau double")

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 # composed from the component oracles regardless of import order
 from minimised_impala_spark.extensions import dedup as _dedup  # noqa: F401
 from minimised_impala_spark.extensions import similarity as _similarity  # noqa: F401
+from minimised_impala_spark.operators.pairs import ordered_pairs
 from minimised_impala_spark.queries import aggregates as _aggregates  # noqa: F401
 from minimised_impala_spark.queries.registry import ORACLES, QUERIES, query
 from minimised_impala_spark.streaming import stateful as _stateful  # noqa: F401
@@ -361,19 +362,15 @@ def pipeline_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFram
     grams = docs.withColumn("toks", F.split("text", " ")).select(
         "source", F.explode(_trigrams_of(F.col("toks"))).alias("sh")
     )
-    # Posting-list pair expansion (r12 optimization, guide §2.4): group
-    # the gram stream by gram, expand the |sources|-bounded posting
-    # list into ordered source pairs, count per pair. ONE exchange on the
-    # gram key replaces the previous self-equi-join's two shuffles of the
-    # gram stream + join — the same pattern the MinHash candidate
-    # generator uses; per-gram work is ≤ |sources|² exactly as the
-    # self-join's per-gram output was. collect_set replaces the earlier
-    # separate distinct pass (set semantics dedupe (source, gram) pairs
-    # map-side inside the SAME aggregate — one exchange builds the
-    # posting table where distinct + groupBy paid two), and the posting
-    # table is persisted so the per-source totals come from an explode
-    # of the postings instead of a second corpus scan (2 scans / 5
-    # exchanges → 1 scan / 3). Plan diff:
+    # Posting-list pair expansion (operators/pairs.py): group the gram
+    # stream by gram, expand the |sources|-bounded posting list into
+    # ordered source pairs, count per pair. collect_set replaces the
+    # earlier separate distinct pass (set semantics dedupe (source,
+    # gram) pairs map-side inside the SAME aggregate — one exchange
+    # builds the posting table where distinct + groupBy paid two), and
+    # the posting table is persisted so the per-source totals come from
+    # an explode of the postings instead of a second corpus scan (2
+    # scans / 5 exchanges → 1 scan / 3). Plan diff:
     # plans/r12/pipeline_source_overlap_matrix_{before,after}.txt.
     posting = (
         grams.groupBy("sh")
@@ -386,17 +383,7 @@ def pipeline_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFram
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_grams"))
     )
     common = (
-        posting.filter(F.size("srcs") > 1)
-        # two chained Generate nodes, not a flatten/transform lambda
-        # tree — generators codegen, nested lambdas don't (same rewrite
-        # as the dedup LSH candidate stages)
-        .select("srcs", F.posexplode("srcs").alias("i", "source_a"))
-        .select(
-            "source_a",
-            F.explode(F.expr("slice(srcs, i + 2, size(srcs) - i - 1)")).alias(
-                "source_b"
-            ),
-        )
+        ordered_pairs(posting, "srcs", "source_a", "source_b")
         .groupBy("source_a", "source_b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("grams_common"))
     )

@@ -112,7 +112,6 @@ def cosine_pair(a: pd.Series, b: pd.Series) -> pd.Series:
 # kernels are pure; the flag only forbids the optimizer from duplicating or
 # reordering them, halving the rescore stage. Use the plain kernel whenever
 # the output is not filtered — the flag also blocks legitimate pushdowns.
-dot_pair_once = dot_pair.asNondeterministic()
 cosine_pair_once = cosine_pair.asNondeterministic()
 
 
@@ -219,39 +218,20 @@ def make_bucket_udf(plane_offset: int, n_planes: int = N_PLANES):
     return bucket_of
 
 
-def make_band_sig_udf(n_bands: int, band_planes: int):
-    """UDF factory: banded LSH signatures — one ``band_planes``-bit bucket
-    per band, band k over planes [k·band_planes, (k+1)·band_planes), all
-    from the SAME md5-derived plane table. Returns array<long> of length
-    ``n_bands``. One numpy matmul computes every plane dot for the batch
-    (n × DIM @ DIM × n_bands·band_planes), so signature cost is flat in
-    the band count. The banding tradeoff: a pair colliding in ANY band is
-    a candidate — P(candidate) = 1 − (1 − p^r)^b for per-plane agreement
-    p = 1 − θ/π, so recall at a given cosine rises with b while random
-    collisions stay ∝ b·2^−r."""
-    total = n_bands * band_planes
-    planes = np.array([plane(pl) for pl in range(total)])  # total × DIM
-    powers = np.arange(band_planes)
-
-    @pandas_udf(_ARR_L)
-    def band_sigs(s: pd.Series) -> pd.Series:
-        if s.empty:
-            return _empty("object")
-        bits = (_mat(s) @ planes.T) > 0  # n × total
-        b = bits.reshape(len(bits), n_bands, band_planes)
-        sigs = (b << powers).sum(axis=2).astype("int64")  # n × n_bands
-        return pd.Series(list(sigs))
-
-    return band_sigs
-
-
-def make_lsh_prep_udf(n_bands: int, band_planes: int, with_norm_vec: bool = False):
+def make_lsh_prep_udf(n_bands: int, band_planes: int):
     """UDF factory: ONE Arrow crossing per corpus row computes everything
-    the banded-LSH dedup pipeline needs — the banded signatures (same
-    definition as make_band_sig_udf), the int8 proxy codes + scale + L2
-    norm for the rescore pre-filter (see cosine_ub_pair), and optionally
-    the normalized vector for the exact rescore. Guide §4.1: the
-    JVM↔Python crossing is the cost — cross once with every output."""
+    the banded-LSH dedup pipeline needs — the banded signatures and the
+    int8 proxy codes + scale + L2 norm for the rescore pre-filter (see
+    cosine_ub_pair). Guide §4.1: the JVM↔Python crossing is the cost —
+    cross once with every output.
+
+    ``sigs`` is one ``band_planes``-bit bucket per band, band k over
+    planes [k·band_planes, (k+1)·band_planes) of the md5-derived plane
+    table; one numpy matmul computes every plane dot for the batch, so
+    signature cost is flat in the band count. A pair colliding in ANY
+    band is a candidate: P(candidate) = 1 − (1 − p^r)^b for per-plane
+    agreement p = 1 − θ/π, so recall at a given cosine rises with b
+    while random collisions stay ∝ b·2^−r."""
     total = n_bands * band_planes
     planes = np.array([plane(pl) for pl in range(total)])
     powers = np.arange(band_planes)
@@ -261,14 +241,11 @@ def make_lsh_prep_udf(n_bands: int, band_planes: int, with_norm_vec: bool = Fals
         T.StructField("qs", T.DoubleType()),
         T.StructField("nrm", T.DoubleType()),
     ]
-    if with_norm_vec:
-        fields.append(T.StructField("ne", _ARR_D))
 
     @pandas_udf(T.StructType(fields))
     def lsh_prep(s: pd.Series) -> pd.DataFrame:
-        cols = ["sigs", "q", "qs", "nrm"] + (["ne"] if with_norm_vec else [])
         if s.empty:
-            return pd.DataFrame({c: _empty("object") for c in cols})
+            return pd.DataFrame({f.name: _empty("object") for f in fields})
         m = _mat(s)
         bits = (m @ planes.T) > 0
         sigs = (bits.reshape(len(m), n_bands, band_planes) << powers).sum(
@@ -278,15 +255,12 @@ def make_lsh_prep_udf(n_bands: int, band_planes: int, with_norm_vec: bool = Fals
         safe = np.where(scale == 0.0, 1.0, scale)
         q = np.sign(m) * np.floor(np.abs(m) / safe[:, None] + 0.5)
         nrm = np.sqrt((m * m).sum(axis=1))
-        out = {
+        return pd.DataFrame({
             "sigs": list(sigs),
             "q": list(q.astype("int8")),
             "qs": scale,
             "nrm": nrm,
-        }
-        if with_norm_vec:
-            out["ne"] = list(m / nrm[:, None])
-        return pd.DataFrame(out)
+        })
 
     return lsh_prep
 

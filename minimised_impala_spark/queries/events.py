@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from minimised_impala_spark.operators.pairs import ordered_pairs
 from minimised_impala_spark.queries.registry import query
 from minimised_impala_spark.tables import load_table
 
@@ -1273,22 +1274,15 @@ def _cooccurrence_edges(ev: DataFrame) -> DataFrame:
         .filter(F.col("rn") <= 16)
         .drop("rn")
     )
-    # In-cell pair expansion (r12 optimization, guide §2.4): collect the
-    # ≤16 capped users per cell — the groupBy is keyed exactly like the
-    # window, so it REUSES the window's exchange — and expand ordered
-    # pairs with two chained generators. This deletes the previous
-    # cells×cells self-join (which recomputed the capped-cell subtree on
-    # both sides) and its join exchange; the (u, v) weight aggregate is
-    # unchanged. sort_array ascending reproduces the row_number's
-    # user_id order, and the tail slice gives exactly the v > u pairs.
+    # In-cell pair expansion (operators/pairs.py) over the ≤16 capped
+    # users per cell: the groupBy is keyed exactly like the window, so
+    # it REUSES the window's exchange. sort_array ascending reproduces
+    # the row_number's user_id order, so the pairs are exactly v > u.
+    us = cells.groupBy("event_type", "h").agg(
+        F.sort_array(F.collect_list("user_id")).alias("us")
+    )
     return (
-        cells.groupBy("event_type", "h")
-        .agg(F.sort_array(F.collect_list("user_id")).alias("us"))
-        .select("us", F.posexplode("us").alias("i", "u"))
-        .select(
-            "u",
-            F.explode(F.expr("slice(us, i + 2, size(us) - i - 1)")).alias("v"),
-        )
+        ordered_pairs(us, "us", "u", "v")
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("w"))
         .filter(F.col("w") >= 4)
@@ -1312,9 +1306,10 @@ def _orient_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     # selectExpr strings, not nested Column trees: every Column operator
     # is a py4j round trip and this helper alone cost ~0.5 s of the
     # caller's plan build (r12; the analyzed plan is identical)
-    # persist: deg has FOUR consumers (the two orient joins, the wedge
-    # sum and the node count) — uncached, each one re-ran the
-    # union+groupBy exchange over the edge list (r12, guide §5)
+    # persist: deg has THREE consumers (the two orient joins and the
+    # one aggregate for the wedge sum and node count) — uncached, each
+    # one re-ran the union+groupBy exchange over the edge list (r12,
+    # guide §5)
     # explode(array(u, v)) instead of a two-scan unionAll: ONE pass over
     # the cached edge list feeds the degree count (r13, guide §2.4)
     deg = (
@@ -1339,7 +1334,7 @@ def _orient_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
 def events_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     edges = _cooccurrence_edges(ev)
-    # four consumers below (degrees, orientation, edge count) re-run the
+    # three consumers below (degrees, orientation, edge count) re-run the
     # capped cell self-join without this; same seam as link prediction.
     # persist(), not localCheckpoint: PySpark builds the checkpoint RDD
     # at CALL time even with eager=False (~0.5 s of serial driver work
@@ -1350,26 +1345,18 @@ def events_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg, oriented = _orient_edges(edges)
     # two arms read the oriented edge list (wedge build + closing edges)
     oriented = oriented.persist()
-    # Fused wedge build (r13, guide §2.4 — the "fused orient-join"
-    # VERDICT r12 item 2 asked for): the old x⋈y self-join shuffled the
-    # oriented list twice by s and paid a SortMergeJoin just to pair
-    # each node's out-neighbours; the orientation bounds out-degree at
-    # ~O(sqrt(E)), so the per-s neighbour list is collect_list-safe at
-    # any scale and ordered pairs expand in-group — the SAME
-    # posexplode + slice generator the edge build uses. sort_array over
-    # struct(td, t) reproduces the join's (ytd > xtd OR (ytd = xtd AND
-    # yt > xt)) order exactly ((td, t) is unique within an s-group:
-    # edges are distinct). ONE exchange on s instead of two + SMJ.
-    wedges = (
-        oriented.groupBy("s")
-        .agg(F.sort_array(F.collect_list(F.struct("td", "t"))).alias("nb"))
-        .select("nb", F.posexplode("nb").alias("i", "x"))
-        .select(
-            F.col("x.t").alias("a"),
-            F.expr("slice(nb, i + 2, size(nb) - i - 1)").alias("rest"),
-        )
-        .select("a", F.expr("transform(rest, y -> y.t)").alias("bs"))
-        .select("a", F.explode("bs").alias("b"))
+    # Fused wedge build: each node's out-neighbours paired in-group
+    # (operators/pairs.py) instead of an x⋈y self-join on s. The
+    # orientation bounds out-degree at ~O(sqrt(E)), so the per-s
+    # neighbour list is collect_list-safe at any scale. sort_array over
+    # struct(td, t) reproduces the oracle join's (ytd > xtd OR (ytd = xtd
+    # AND yt > xt)) order exactly ((td, t) is unique within an s-group:
+    # edges are distinct).
+    nb = oriented.groupBy("s").agg(
+        F.sort_array(F.collect_list(F.struct("td", "t"))).alias("nb")
+    )
+    wedges = ordered_pairs(nb, "nb", "x", "y").select(
+        F.col("x.t").alias("a"), F.col("y.t").alias("b")
     )
     # Closing-edge membership stays a JOIN (not union+groupBy): AQE
     # broadcasts the oriented edge list at fixture scale (zero wedge

@@ -337,7 +337,7 @@ def test_dedup_embedding_lsh_no_allpairs_join(spark, sf_dir):
     plan = _physical(fresh("dedup_embedding_lsh")(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
-    # rescore joins back to the normalized vectors by id — hash equi-joins
+    # rescore joins back to the raw vectors by id — hash equi-joins
     assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan or (
         "ShuffledHashJoin" in plan
     ), plan

@@ -149,13 +149,14 @@ def test_kll_sketch_merge_matches_single_pass(spark):
 
 
 def test_band_signature_kernel_properties():
-    """Numpy-level properties of the banded-LSH signature kernel
-    (vector_kernels.make_band_sig_udf's inner math, evaluated directly):
+    """Properties of the banded-LSH signatures the shipped kernel
+    (vector_kernels.make_lsh_prep_udf, ``sigs`` field) computes:
     (a) each band's bucket encodes exactly the sign pattern of its own
     plane block — recomputed independently per plane; (b) identical
     vectors share every band; (c) a sign-flipped vector shares none
     (every plane dot flips, every bucket is the bitwise complement)."""
     import numpy as np
+    import pandas as pd
 
     from minimised_impala_spark.extensions import vector_kernels as VK
 
@@ -164,9 +165,13 @@ def test_band_signature_kernel_properties():
     planes = np.array([VK.plane(pl) for pl in range(total)])
     rng = np.random.default_rng(7)
     m = rng.normal(size=(40, VK.DIM))
-    # the kernel's vectorized computation
-    bits = (m @ planes.T) > 0
-    sigs = (bits.reshape(len(m), n_bands, r) << np.arange(r)).sum(axis=2)
+    prep = VK.make_lsh_prep_udf(n_bands, r).func
+
+    def sigs_of(vecs):
+        return np.vstack(prep(pd.Series(list(vecs)))["sigs"].to_numpy())
+
+    sigs = sigs_of(m)
+    assert sigs.shape == (40, n_bands)
     # (a) independent per-plane recomputation
     for v in range(0, 40, 7):
         for b in range(n_bands):
@@ -177,11 +182,60 @@ def test_band_signature_kernel_properties():
             )
             assert sigs[v, b] == expect
     # (b) duplicates collide in every band
-    dup = np.vstack([m, m[:3]])
-    bits2 = (dup @ planes.T) > 0
-    sigs2 = (bits2.reshape(len(dup), n_bands, r) << np.arange(r)).sum(axis=2)
+    sigs2 = sigs_of(np.vstack([m, m[:3]]))
     assert (sigs2[:3] == sigs2[40:43]).all()
     # (c) sign-flip complements every bucket (no plane dot is exactly 0
     # for continuous random vectors)
-    flip_bits = ((-m) @ planes.T) > 0
-    assert not (bits & flip_bits).any()
+    assert ((sigs ^ sigs_of(-m)) == (1 << r) - 1).all()
+
+
+def test_int8_cosine_upper_bound_never_below_exact():
+    """vector_kernels.cosine_ub_pair, fed the int8 codes, scale and norm
+    that make_lsh_prep_udf produces, is >= the exact cosine for every
+    pair: the LSH dedup pre-filter drops a pair only when its true
+    cosine cannot reach the threshold. Covers non-zero vectors whose
+    scale is near zero (or huge), elements at the max magnitude (codes
+    at ±127) and one dominant component (the others quantize to 0), for
+    identical, partly zeroed and independent pairs."""
+    import numpy as np
+    import pandas as pd
+    from hypothesis import assume, given, settings
+    from hypothesis import strategies as st
+
+    from minimised_impala_spark.extensions import vector_kernels as VK
+
+    prep = VK.make_lsh_prep_udf(1, 1).func
+
+    @st.composite
+    def vectors(draw):
+        m = np.array(draw(st.lists(
+            st.floats(-1.0, 1.0, allow_subnormal=False),
+            min_size=VK.DIM, max_size=VK.DIM,
+        )))
+        # component k fixes max|m| at 1 (1e6 when dominant), so |m|²
+        # stays a normal double at every scale drawn below
+        k = draw(st.integers(0, VK.DIM - 1))
+        m[k] = draw(st.sampled_from((-1.0, 1.0)))
+        shape = draw(st.sampled_from(("plain", "saturated", "dominant")))
+        if shape == "saturated":
+            m = np.where(np.abs(m) > 0.5, np.sign(m), m)
+        elif shape == "dominant":
+            m[k] *= 1e6
+        return m * 10.0 ** draw(st.integers(-100, 100))
+
+    @settings(max_examples=300, deadline=None)
+    @given(a=vectors(), other=vectors(), kind=st.sampled_from(("same", "zeroed", "other")))
+    def check(a, other, kind):
+        b = {"same": a, "other": other}.get(kind)
+        if b is None:
+            b = a.copy()
+            b[::16] = 0.0
+        assume(np.any(b != 0.0))
+        p = prep(pd.Series([a, b]))
+        one = [p[c].iloc[[0]].reset_index(drop=True) for c in ("q", "qs", "nrm")]
+        two = [p[c].iloc[[1]].reset_index(drop=True) for c in ("q", "qs", "nrm")]
+        ub = float(VK.cosine_ub_pair.func(*one, *two).iloc[0])
+        exact = float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
+        assert ub >= exact, (ub, exact)
+
+    check()

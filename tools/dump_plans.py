@@ -3,7 +3,8 @@
 
     python tools/dump_plans.py before tpch_q1 tpch_q5 ...
 
-Writes plans/r12/<name>_<tag>.txt. Uses the bench session preset
+Writes plans/$SPARK_GRAFT_PLANS_DIR/<name>_<tag>.txt (default
+plans/r13/). Uses the bench session preset
 (local[$SPARK_GRAFT_CPUS], AQE on) so plan shape matches what the bench
 executes.
 """
